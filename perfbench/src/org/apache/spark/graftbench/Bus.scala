@@ -1,0 +1,11 @@
+package org.apache.spark.graftbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus drain, which Spark keeps package-private:
+  * counters read from a listener are complete only once every event
+  * posted before the read has been delivered.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
