@@ -1,8 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, expr}
+
+import graft.operators.{CorpusOps, CowErasure, DataSkipping, Graph,
+  LakehouseMerge, RelationalQueries2, RelationalQueries4, Similarity}
 
 /** Benchmark main. Prints ONE COMPACT JSON line — total, per-query
   * map (rounded to ms so the line stays ~7 KB — the r7-era full-
@@ -33,7 +38,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.envSfDir
     // GB-scale flagship FIRST, in a forked fresh JVM, BEFORE this
     // process builds its own 48g SparkSession: the one comparison
     // BASELINE.md publishes at like volume (reference: 481 s over
@@ -51,64 +56,17 @@ object Bench {
     // throughput under load) and solo.<q>.solo_sec (fresh JVM) — any
     // divergence is suite pressure by construction, not a regression.
     val soloJson = runSoloForked()
-    // Warm at the TARGET scale: interpreted-lambda paths need ~10k
-    // invocations before C2 compiles them; sf0.001 volumes never get
-    // there and the first timed query absorbs ~15s of JIT instead.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Force FULL execution through the noop sink, NOT count():
-    // count() lets the optimizer ELIMINATE subtrees whose rows provably
-    // don't change the cardinality — on the faithful flagship the
-    // 3 GB-scan branch sits behind a left join with unique build-side
-    // keys, and count() measured a 7-row local plan with ZERO bytes
-    // read (caught via input-metrics audit on the GB corpus). A write
-    // needs every column of every row, so nothing is elidable.
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-    // clearCache after EVERY query: operator-internal cache() calls
-    // (Dedup's shingle table) persist in the session CacheManager, and
-    // a later query with the same subtree (d3 after d2) would otherwise
-    // serve it from cache — each query's time must include ALL of its
-    // own work, nothing of its neighbors'. This also bounds storage
-    // memory across the multi-query run.
+    val cpus = Harness.envCpus
+    val spark = Harness.session(cpus)
+    val queries = SparkEntry.queries.keys.toSeq.sorted
     def timeOnce(dir: String): Map[String, Double] = {
       // sacrificial warmup actions: run the first query 3x, untimed, so
       // per-pass JVM/codegen/C2 warmup is not attributed to it (one run
       // compiles; steady state needs the compiled code to actually run)
-      for (i <- 1 to 3) {
-        try run(queries.head._2(spark, dir))
-        catch { case NonFatal(e) =>
-          // name + full stack: any trace in bench stderr must be
-          // attributable to a specific query and phase (r8 shipped an
-          // orphan AnalysisException no recorded pass accounted for)
-          System.err.println(
-            s"[bench] sacrificial warmup $i (${queries.head._1}) failed:")
-          e.printStackTrace()
-        }
-        spark.catalog.clearCache()
-      }
-      queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { run(fn(spark, dir)); true }
-          catch { case NonFatal(e) =>
-            System.err.println(s"[bench] $name failed:")
-            e.printStackTrace()
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        name -> (if (ok) dt else -1.0)
-      }.toMap
+      for (i <- 1 to 3) orElse(s"sacrificial warmup $i (${queries.head})", 0.0)(
+        Harness.runQuery(spark, queries.head, dir))
+      queries.map(name =>
+        name -> orElse(name, -1.0)(Harness.runQuery(spark, name, dir))).toMap
     }
     // FULL WARM SWEEP at a tiny SF before any timed pass: the three
     // sacrificial runs only warm the first-sorted query's subtree —
@@ -116,139 +74,68 @@ object Bench {
     // first timed run (observed: s4's pass-0 at 65 s vs 5.8 s warm).
     // One sweep at sf0.001 compiles every plan shape for ~1 min total,
     // so both timed passes run against a warm JIT. Skipped when the
-    // sweep dir is absent (or set SPARK_GRAFT_WARMSWEEP_DIR= to disable).
-    val sweepDir = sys.env.getOrElse("SPARK_GRAFT_WARMSWEEP_DIR",
-      "/root/testdata/sf0.001")
-    if (sweepDir.nonEmpty && new java.io.File(sweepDir).isDirectory) {
-      val s0 = System.nanoTime()
-      timeOnce(sweepDir)
-      System.err.println(
-        f"[bench] warm sweep at $sweepDir: ${(System.nanoTime() - s0) / 1e9}%.1f s")
+    // sweep dir is absent.
+    Harness.envWarmDir.foreach { sweepDir =>
+      val secs = Harness.timed(timeOnce(sweepDir))._2
+      System.err.println(f"[bench] warm sweep at $sweepDir: $secs%.1f s")
     }
-    // Both passes are complete runs at the target SF; reporting the
-    // per-query minimum measures steady-state throughput and shields
-    // single queries from transient host contention. Failures are
-    // tracked PER PASS: a warm-pass-only blip never discards a valid
-    // timed measurement — a query is reported failed only if every pass
-    // that feeds its reported number failed.
-    val warm = timeOnce(warmDir)
+    // Both passes are complete runs at the target SF (interpreted-lambda
+    // paths need ~10k invocations before C2 compiles them, which sweep
+    // volumes never reach); reporting the per-query minimum measures
+    // steady-state throughput and shields single queries from transient
+    // host contention. Failures are tracked PER PASS: a one-pass blip
+    // never discards a valid timed measurement — a query is reported
+    // failed only if both passes failed.
+    val warm = timeOnce(sfDir)
     val timed = timeOnce(sfDir)
-    val results = queries.map { case (name, _) =>
-      val (w, t) = (warm(name), timed(name))
-      val v =
-        if (warmDir == sfDir) (w, t) match {
-          case (-1.0, -1.0) => -1.0
-          case (-1.0, tv)   => tv
-          case (wv, -1.0)   => wv
-          case (wv, tv)     => math.min(wv, tv)
-        }
-        else t
-      name -> v
+    val results = queries.map(name => name ->
+      Seq(warm(name), timed(name)).filter(_ >= 0).minOption.getOrElse(-1.0))
+    // Build-vs-query (s3, s2, s13) and cold-vs-warm (q88, q91) splits:
+    // the suite's numbers amortize an index or a store publish across
+    // passes (pass 1 builds, pass 2 reuses, min = reuse) — these time
+    // the halves explicitly so the artifact states the amortization
+    // instead of implying it. Each split runs `reset`, times `first`,
+    // runs `between`, times `second`, then runs `after`; (-1, -1) on
+    // failure. The timed halves use the noop sink (full execution):
+    // r9 and earlier used count(), which can elide non-cardinality-
+    // changing subtrees, so r9-era split numbers are not comparable.
+    def split(label: String)(reset: => Unit, first: => Any,
+        between: => Unit, second: => Any, after: => Unit = ())
+        : (Double, Double) = orElse(s"$label split", (-1.0, -1.0)) {
+      reset
+      val a = Harness.timed(first)._2
+      between
+      val b = Harness.timed(second)._2
+      after
+      (a, b)
     }
-    // s3 IVF build-vs-query split: the suite's s3 number amortizes the
-    // index across passes (pass 1 builds, pass 2 queries, min = query) —
-    // these two time the halves explicitly so the artifact states the
-    // amortization instead of implying it.
-    // METHODOLOGY NOTE (r10): the split runs use the noop-sink run()
-    // (full execution) — r9 and earlier used count(), which can elide
-    // non-cardinality-changing subtrees, so split numbers from r9-
-    // era artifacts are not comparable to r10+ ones.
-    val (ivfBuild, ivfQuery) = try {
-      graft.operators.Similarity.invalidateIvfIndexes()
-      val b0 = System.nanoTime()
-      val idx = graft.operators.Similarity.ivfIndexFor(spark, sfDir)
-      val b = (System.nanoTime() - b0) / 1e9
-      // noop sink, not count(): the split numbers must share the full-
-      // execution methodology of the per-query passes (count() lets the
-      // optimizer elide non-cardinality-changing subtrees)
-      val q0 = System.nanoTime()
-      run(graft.operators.Similarity.ivfTopK(spark, sfDir))
-      val q = (System.nanoTime() - q0) / 1e9
-      require(idx != null)
-      (b, q)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] s3 ivf build/query split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-    // s2 LSH build-vs-query split, same contract as s3's.
-    val (lshBuild, lshQuery) = try {
-      graft.operators.Similarity.invalidateLshIndexes()
-      val b0 = System.nanoTime()
-      val idx = graft.operators.Similarity.lshIndexFor(spark, sfDir)
-      val b = (System.nanoTime() - b0) / 1e9
-      val q0 = System.nanoTime()
-      run(graft.operators.Similarity.lshTopK(spark, sfDir))
-      val q = (System.nanoTime() - q0) / 1e9
-      require(idx != null)
-      (b, q)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] s2 lsh build/query split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-    // q88 cold-publish vs warm-read split (the s2/s3 amortization
-    // contract, on the lakehouse store): the suite's q88 number
-    // amortizes the two publishes across passes — these two state it.
-    // Cold = drop the table, run the full base-publish + merge-publish
-    // + read; warm = manifest-head resolve + versioned read only.
-    val (q88Cold, q88Warm) = try {
-      graft.operators.LakehouseMerge.invalidateOrdersSummary(spark, sfDir)
-      val c0 = System.nanoTime()
-      run(graft.operators.LakehouseMerge.upsertOrdersSummary(spark, sfDir))
-      val c = (System.nanoTime() - c0) / 1e9
-      spark.catalog.clearCache()
-      val w0 = System.nanoTime()
-      run(graft.operators.LakehouseMerge.upsertOrdersSummary(spark, sfDir))
-      val wv = (System.nanoTime() - w0) / 1e9
-      spark.catalog.clearCache()
-      (c, wv)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] q88 cold/warm split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-    // q91 cold-erase vs warm-read split (same contract): cold = drop
-    // the COW store, publish base + erase + mixed-ownership read;
-    // warm = manifest resolve + partition-pruned read only.
-    val (q91Cold, q91Warm) = try {
-      graft.operators.CowErasure.invalidate(spark, sfDir)
-      val c0 = System.nanoTime()
-      run(graft.operators.CowErasure.erasedSummary(spark, sfDir))
-      val c = (System.nanoTime() - c0) / 1e9
-      spark.catalog.clearCache()
-      val w0 = System.nanoTime()
-      run(graft.operators.CowErasure.erasedSummary(spark, sfDir))
-      val wv = (System.nanoTime() - w0) / 1e9
-      spark.catalog.clearCache()
-      (c, wv)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] q91 cold/warm split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-
-    // s13 IVF-PQ build-vs-query split, same contract as s3's: the
-    // build is timed DIRECTLY (the index call materializes it — the
-    // checkpointed code table and collected centroids are eager), not
-    // as a difference of two noisy end-to-end runs.
-    val (ivfPqBuild, ivfPqQuery) = try {
-      graft.operators.Similarity.invalidateIvfPqIndexes()
-      spark.catalog.clearCache()
-      val b0 = System.nanoTime()
-      val idx = graft.operators.Similarity.ivfPqIndexFor(spark, sfDir)
-      val b = (System.nanoTime() - b0) / 1e9
-      spark.catalog.clearCache()
-      val q0 = System.nanoTime()
-      run(graft.operators.Similarity.ivfPqTopK(spark, sfDir))
-      val q = (System.nanoTime() - q0) / 1e9
-      require(idx != null)
-      (b, q)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] s13 ivfpq build/query split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
+    def clear(): Unit = spark.catalog.clearCache()
+    val (ivfBuild, ivfQuery) = split("s3 ivf build/query")(
+      Similarity.invalidateIvfIndexes(), Similarity.ivfIndexFor(spark, sfDir),
+      (), Harness.sink(Similarity.ivfTopK(spark, sfDir)))
+    val (lshBuild, lshQuery) = split("s2 lsh build/query")(
+      Similarity.invalidateLshIndexes(), Similarity.lshIndexFor(spark, sfDir),
+      (), Harness.sink(Similarity.lshTopK(spark, sfDir)))
+    // q88 on the lakehouse store: cold = drop the table, run the full
+    // base-publish + merge-publish + read; warm = manifest-head resolve
+    // + versioned read only.
+    val (q88Cold, q88Warm) = split("q88 cold/warm")(
+      LakehouseMerge.invalidateOrdersSummary(spark, sfDir),
+      Harness.sink(LakehouseMerge.upsertOrdersSummary(spark, sfDir)), clear(),
+      Harness.sink(LakehouseMerge.upsertOrdersSummary(spark, sfDir)), clear())
+    // q91: cold = drop the COW store, publish base + erase + mixed-
+    // ownership read; warm = manifest resolve + partition-pruned read.
+    val (q91Cold, q91Warm) = split("q91 cold/warm")(
+      CowErasure.invalidate(spark, sfDir),
+      Harness.sink(CowErasure.erasedSummary(spark, sfDir)), clear(),
+      Harness.sink(CowErasure.erasedSummary(spark, sfDir)), clear())
+    // s13: the build is timed DIRECTLY (the index call materializes it —
+    // the checkpointed code table and collected centroids are eager),
+    // not as a difference of two noisy end-to-end runs.
+    val (ivfPqBuild, ivfPqQuery) = split("s13 ivfpq build/query")(
+      { Similarity.invalidateIvfPqIndexes(); clear() },
+      Similarity.ivfPqIndexFor(spark, sfDir),
+      clear(), Harness.sink(Similarity.ivfPqTopK(spark, sfDir)))
     // Accuracy of the approximate operators, machine-readable
     // (r11 verdict #4): recall@5 vs the s1 exact baseline for the ANN
     // family, HLL relative error for q27, Bloom false-negative count +
@@ -257,33 +144,32 @@ object Bench {
     // instead of it living only in spec info() lines. (s14 is not
     // re-measured: it is s3's query over a persisted index, exact-
     // parity-proven in IndexStoreSpec, so s3_recall_at5 covers it.)
-    val accJson = try {
-      import org.apache.spark.sql.functions.col
-      def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+    val accJson = orElse("accuracy block", "") {
+      def pairSet(df: DataFrame): Set[(Long, Long)] = {
         val s = df.select("query_id", "neighbor_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         spark.catalog.clearCache(); s
       }
-      val exact = pairSet(graft.operators.Similarity.bruteForceTopK(spark, sfDir))
-      def recall(df: org.apache.spark.sql.DataFrame): Double =
+      val exact = pairSet(Similarity.bruteForceTopK(spark, sfDir))
+      def recall(df: DataFrame): Double =
         (exact intersect pairSet(df)).size.toDouble / exact.size
-      val rS2 = recall(graft.operators.Similarity.lshTopK(spark, sfDir))
-      val rS3 = recall(graft.operators.Similarity.ivfTopK(spark, sfDir))
-      val rS10 = recall(graft.operators.Similarity.pqTopK(spark, sfDir))
-      val rS13 = recall(graft.operators.Similarity.ivfPqTopK(spark, sfDir))
+      val rS2 = recall(Similarity.lshTopK(spark, sfDir))
+      val rS3 = recall(Similarity.ivfTopK(spark, sfDir))
+      val rS10 = recall(Similarity.pqTopK(spark, sfDir))
+      val rS13 = recall(Similarity.ivfPqTopK(spark, sfDir))
       // s16's baseline is the exact all-pairs JOIN (s4), not s1's
       // 5-query scan — every corpus row is a query here
-      val exactJoin = pairSet(graft.operators.Similarity.knnJoin(spark, sfDir))
+      val exactJoin = pairSet(Similarity.knnJoin(spark, sfDir))
       val rS16 = (exactJoin intersect
-        pairSet(graft.operators.Similarity.ivfKnnJoin(spark, sfDir)))
+        pairSet(Similarity.ivfKnnJoin(spark, sfDir)))
         .size.toDouble / exactJoin.size
-      val q27 = graft.operators.RelationalQueries2.approxDistinct(spark, sfDir)
+      val q27 = RelationalQueries2.approxDistinct(spark, sfDir)
         .select("approx_orders", "exact_orders").head()
       val hllErr =
         math.abs(q27.getLong(0).toDouble - q27.getLong(1)) / q27.getLong(1)
-      val exFlags = graft.operators.CorpusOps.decontaminate(spark, sfDir)
+      val exFlags = CorpusOps.decontaminate(spark, sfDir)
         .select(col("doc_id"), col("n_shared"))
-      val blFlags = graft.operators.CorpusOps.decontaminateBloom(spark, sfDir)
+      val blFlags = CorpusOps.decontaminateBloom(spark, sfDir)
         .select(col("doc_id"), col("n_shared_bloom"))
       // superset contract: every exactly-flagged doc bloom-flagged with
       // a >= shared-count; violations are FALSE NEGATIVES (must be 0)
@@ -294,15 +180,13 @@ object Bench {
       val corpus = Tables.documents(spark, sfDir).count()
       // q87: sketch quantiles vs the exact order statistics, max
       // relative error across all (event_type, percentile) cells
-      val approxQ = graft.operators.RelationalQueries4
-        .approxQuantiles(spark, sfDir)
+      val approxQ = RelationalQueries4.approxQuantiles(spark, sfDir)
         .collect().map(r => r.getString(0) ->
           (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
       val exactQ = Tables.events(spark, sfDir)
         .filter(col("value").isNotNull && col("event_type").isNotNull)
         .groupBy(col("event_type"))
-        .agg(org.apache.spark.sql.functions.expr(
-          "percentile(value, array(0.5, 0.95, 0.99))").as("ps"))
+        .agg(expr("percentile(value, array(0.5, 0.95, 0.99))").as("ps"))
         .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
       val q87Err = exactQ.map { case (t, ex) =>
         val (a50, a95, a99) = approxQ(t)
@@ -313,60 +197,62 @@ object Bench {
       // g6's hub cap drops customers from pair generation silently
       // (r13 verdict #6) — publish how many, so the cap's coverage
       // loss at this SF is in the artifact, not just the contract
-      val g6Capped = graft.operators.Graph
-        .supplierOverlapCappedCount(spark, sfDir)
+      val g6Capped = Graph.supplierOverlapCappedCount(spark, sfDir)
       // q101's bloom false-positive rate, probed stats-only against
       // 200 absent keys — bloomBitsFor's ≈0.03 design point as a
       // measured per-round number (r16: m sized from rows/file at
       // write time; the fixed-m layout this replaced measured 0.549)
-      val bloomFpr = graft.operators.DataSkipping.bloomFalsePositiveRate(
-        spark, graft.operators.DataSkipping.ensureLinear(spark, sfDir))
+      val bloomFpr = DataSkipping.bloomFalsePositiveRate(
+        spark, DataSkipping.ensureLinear(spark, sfDir))
       spark.catalog.clearCache()
       System.err.println(f"[bench] accuracy: s2 $rS2%.3f s3 $rS3%.3f " +
         f"s10 $rS10%.3f s13 $rS13%.3f s16 $rS16%.3f q27 ±$hllErr%.4f " +
         f"d14 fn=$falseNeg extra=$extra/$corpus q87 ±$q87Err%.5f " +
         f"g6 capped=$g6Capped bloom fpr=$bloomFpr%.3f")
       s""""s2_recall_at5":$rS2,"s3_recall_at5":$rS3,"s10_recall_at5":$rS10,"s13_recall_at5":$rS13,"s16_recall_at3":$rS16,"q27_hll_rel_err":$hllErr,"d14_false_negatives":$falseNeg,"d14_extra_flag_frac":${extra.toDouble / corpus},"q87_max_rel_err":$q87Err,"g6_capped_customers":$g6Capped,"q101_bloom_fpr":$bloomFpr,"""
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] accuracy block failed:")
-      e.printStackTrace()
-      ""
     }
     val failed = results.collect { case (n, v) if v < 0 => n }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(kvs: Seq[(String, Any)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results)
     // ms-rounded per-query map for the compact stdout line: full
     // precision would make the line ~15 KB (the r7 truncation hazard);
     // at 1 ms granularity 242 queries fit in ~7 KB and the driver's
     // per-query/geomean/scaling comparison gets real numbers. Failed
     // queries keep their -1.0 sentinel.
-    val qsMs = results.map { case (k, v) =>
-      "\"" + k + "\":" + (if (v < 0) "-1.0" else (math.round(v * 1000) / 1000.0).toString)
-    }.mkString("{", ",", "}")
-    val passes = results.map { case (k, _) =>
-      "\"" + k + "\":[" + warm(k) + "," + timed(k) + "]"
-    }.mkString("{", ",", "}")
+    val qsMs = obj(results.map { case (k, v) =>
+      k -> (if (v < 0) "-1.0" else (math.round(v * 1000) / 1000.0).toString) })
+    val passes = obj(queries.map(k => k -> s"[${warm(k)},${timed(k)}]"))
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val detailFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_out.$cpus.json")
     val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsMs,"n_queries":${results.size},"errors":$errs,"sf":"$sfDir","detail":"$detailFile"}"""
-    // warm_sf labels pass 0's scale: when SPARK_GRAFT_WARM_DIR differs
-    // from the target, pass-0 times are NOT target-scale numbers and
-    // the artifact must say so rather than leave them misattributable.
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"s3_ivf_build":$ivfBuild,"s3_ivf_query":$ivfQuery,"s2_lsh_build":$lshBuild,"s2_lsh_query":$lshQuery,"s13_ivfpq_build":$ivfPqBuild,"s13_ivfpq_query":$ivfPqQuery,"q88_cold_publish":$q88Cold,"q88_warm_read":$q88Warm,"q91_cold_erase":$q91Cold,"q91_warm_read":$q91Warm,$accJson$gbJson$soloJson"errors":$errs,"sf":"$sfDir","warm_sf":"$warmDir"}"""
+    // warm_sf (pass 0's scale) always equals sf: both passes run at
+    // the target SF; the field stays for artifact-schema stability.
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"s3_ivf_build":$ivfBuild,"s3_ivf_query":$ivfQuery,"s2_lsh_build":$lshBuild,"s2_lsh_query":$lshQuery,"s13_ivfpq_build":$ivfPqBuild,"s13_ivfpq_query":$ivfPqQuery,"q88_cold_publish":$q88Cold,"q88_warm_read":$q88Warm,"q91_cold_erase":$q91Cold,"q91_warm_read":$q91Warm,$accJson$gbJson$soloJson"errors":$errs,"sf":"$sfDir","warm_sf":"$sfDir"}"""
     println(compact)
-    val outFile = detailFile
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+    try java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case NonFatal(e) =>
       // best-effort artifact: the compact line already went to stdout,
       // a bad path (unwritable OR malformed — hence NonFatal, not just
       // IOException) must not fail the (successful) bench run
-      System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
+      System.err.println(s"[bench] could not write $detailFile: ${e.getMessage}")
     }
     spark.stop()
   }
+
+  // Run `f`; on failure print `label` with the full stack and return
+  // `fallback`. Name + stack: any trace in bench stderr must be
+  // attributable to a specific query and phase (r8 shipped an orphan
+  // AnalysisException no recorded pass accounted for).
+  private def orElse[T](label: String, fallback: T)(f: => T): T =
+    try f catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $label failed:")
+      e.printStackTrace()
+      fallback
+    }
 
   // Fork `mainClass args` into a fresh JVM (this JVM's flags and
   // classpath) and return the payload of its one `marker`-prefixed
@@ -374,23 +260,15 @@ object Bench {
   // traces stay attributable).
   private def forkMain(mainClass: String, args: Seq[String],
       marker: String): Option[String] =
-    try {
+    orElse(s"fork of $mainClass", Option.empty[String]) {
       val javaBin = new java.io.File(
         new java.io.File(System.getProperty("java.home"), "bin"), "java")
-        .getAbsolutePath
       val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments
-      val cmd = new java.util.ArrayList[String]()
-      cmd.add(javaBin)
-      cmd.addAll(jvmArgs)
-      cmd.add("-cp")
-      cmd.add(System.getProperty("java.class.path"))
-      cmd.add(mainClass)
-      args.foreach(cmd.add)
-      val pb = new ProcessBuilder(cmd)
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
+        .getRuntimeMXBean.getInputArguments.asScala.toSeq
+      val cmd = (javaBin.getAbsolutePath +: jvmArgs) ++
+        Seq("-cp", System.getProperty("java.class.path"), mainClass) ++ args
+      val proc = new ProcessBuilder(cmd: _*)
+        .redirectError(ProcessBuilder.Redirect.INHERIT).start()
       val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
       val rc = proc.waitFor()
       val line = out.linesIterator.find(_.startsWith(marker))
@@ -398,10 +276,6 @@ object Bench {
         System.err.println(s"[bench] $mainClass ${args.mkString(" ")} " +
           s"exited rc=$rc without a $marker line")
       line.map(_.stripPrefix(marker))
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] fork of $mainClass failed:")
-      e.printStackTrace()
-      None
     }
 
   // GB flagship in a fresh JVM; "" on failure. Called at the TOP of

@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** GB-scale flagship benchmark, run in its OWN JVM.
   *
   * Why a separate process (r12 lesson): the flagship used to run last
@@ -21,32 +19,21 @@ import org.apache.spark.sql.SparkSession
   * matter how many queries the suite gains.
   *
   * Prints ONE line to stdout: `GBJSON:{...}` — the gb_flagship JSON
-  * fragment [[Bench]] embeds in bench_out.json.
+  * fragment [[Bench]] embeds in its full artifact.
   */
 object FlagshipBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.envSfDir
+    val spark = Harness.session(Harness.envCpus)
     try {
       val g0 = System.nanoTime()
       val glob = graft.sources.TaxiDataGen.ensureScaled(spark, sfDir)
       val genSec = (System.nanoTime() - g0) / 1e9
       val bytes = new java.io.File(glob).getParentFile
         .listFiles().filter(_.getName.endsWith(".csv")).map(_.length).sum
+      def t(f: => Unit): Double = Harness.timed(f)._2
       // collect through formatResult — the reference's own output
       // step, and a 7-row collect cannot be subtree-eliminated
-      def t(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       def faithful(path: String = glob): Unit = {
         graft.operators.TaxiSpeed.formatResult(
           graft.operators.TaxiSpeed.faithfulAvgByDowListed(spark, path)); () }
@@ -70,8 +57,8 @@ object FlagshipBench {
       // stall pollutes the min; a third makes the reported number the
       // steady-state throughput, which is the quantity comparable
       // round-over-round and against the 481 s baseline.
-      val fRuns = Seq(t(faithful()), t(faithful()), t(faithful()))
-      val wRuns = Seq(t(weighted()), t(weighted()), t(weighted()))
+      val fRuns = Seq.fill(3)(t(faithful()))
+      val wRuns = Seq.fill(3)(t(weighted()))
       val (fSec, wSec) = (fRuns.min, wRuns.min)
       System.err.println(f"[bench] gb_flagship (fresh JVM): $bytes%d bytes, " +
         f"ramp $rampSec%.1f s, " +

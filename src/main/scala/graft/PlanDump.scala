@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-evidence dump: `explain("formatted")` of the headline queries →
   * PLANS.md — the inspectable record behind the engine's pushdown /
@@ -12,18 +13,15 @@ import org.apache.spark.sql.SparkSession
   * Run: `sbt "runMain graft.PlanDump [sfDir] [outFile]"`.
   */
 object PlanDump {
+  /** `explain("formatted")` of registered query `name` over `dir`. */
+  def formatted(spark: SparkSession, name: String, dir: String): String =
+    Harness.runQuery(spark, name, dir,
+      _.queryExecution.explainString(FormattedMode))._1
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     val names = Seq(
       "events_speed_faithful", "taxi_avg_speed_faithful",
       "q1_pricing_summary", "q2_filter_project", "q4_star_broadcast",
@@ -92,16 +90,31 @@ object PlanDump {
     sb.append("`InMemoryRelation` where an operator caches a branch-shared ")
     sb.append("relation (d11/d12/t9).\n")
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
       sb.append(s"\n## $n\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(formatted(spark, n, sfDir))
       sb.append("```\n")
-      // operator-internal cache() lifecycles end with the query
-      spark.catalog.clearCache()
     }
     Files.writeString(Paths.get(outFile), sb.toString)
     println("WROTE " + outFile + " " + sb.length + " chars")
+    spark.stop()
+  }
+}
+
+/** Dev tool: `explain("formatted")` of named queries, one file each at
+  * `<outDir>/<name>_<suffix>.txt` (before/after plan evidence for a
+  * rewrite), at `SPARK_GRAFT_CPUS`:
+  *   sbt "runMain graft.ExplainQ <sfDir> <outDir> <suffix> <query>..."
+  */
+object ExplainQ {
+  def main(args: Array[String]): Unit = {
+    val Array(dir, out, suffix) = args.take(3)
+    val spark = Harness.session(Harness.envCpus)
+    new java.io.File(out).mkdirs()
+    args.drop(3).foreach { n =>
+      Files.writeString(Paths.get(s"$out/${n}_$suffix.txt"),
+        PlanDump.formatted(spark, n, dir))
+      println(s"[explainq] wrote $out/${n}_$suffix.txt")
+    }
     spark.stop()
   }
 }

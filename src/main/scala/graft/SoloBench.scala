@@ -2,7 +2,8 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.Shims
 
 /** Standalone-timed tier for the heaviest suite queries (r14 verdict
   * #1), run ONE QUERY PER FRESH JVM — the gb_flagship protocol
@@ -27,9 +28,16 @@ import org.apache.spark.sql.SparkSession
   * episodic multi-10 s stalls uncorrelated with code — see
   * FlagshipBench).
   *
-  * Prints ONE line to stdout: `SOLOJSON:{"solo_sec":…,"runs":[…]}` —
-  * the fragment [[Bench]] embeds per query under the artifact's
-  * `solo` object.
+  * Each timed run also counts its Spark jobs (listener bus drained
+  * around it, so the count is exact): at sf0.1 a fixpoint query costs
+  * rounds × job latency, so job count is what round-overhead work moves.
+  *
+  * Prints one `SOLOJSON:{"solo_sec":…,"runs":[…],"jobs":[…]}` line per
+  * query (the fragment [[Bench]] embeds under the artifact's `solo`
+  * object) and a `[bench] solo <name>: …` summary to stderr. [[Bench]]
+  * forks one JVM per name; several names share one JVM — the dev loop
+  * for same-session times and job counts:
+  * `sbt "runMain graft.SoloBench g5_coreness g7_backbone_components"`.
   *
   * Thread-count sensitivity (r15 root-cause of the "inflation"): the
   * solo tier runs at the SAME `SPARK_GRAFT_CPUS` as the suite so the
@@ -45,43 +53,36 @@ import org.apache.spark.sql.SparkSession
   */
 object SoloBench {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMSWEEP_DIR",
-      "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val fn = SparkEntry.queries(name)
-      // noop sink = full execution (Bench's methodology note: count()
-      // lets the optimizer elide non-cardinality-changing subtrees)
-      def run(dir: String): Unit = {
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
+    val sfDir = Harness.envSfDir
+    val spark = Harness.session(Harness.envCpus)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    try args.foreach { name =>
+      try {
+        Harness.envWarmDir.foreach { warmDir =>
+          for (_ <- 1 to 3) Harness.runQuery(spark, name, warmDir)
+        }
+        val (runs, jobCounts) = (1 to 3).map { _ =>
+          Shims.drainListenerBus(sc)
+          jobs.set(0)
+          val secs = Harness.runQuery(spark, name, sfDir)
+          Shims.drainListenerBus(sc)
+          (secs, jobs.get)
+        }.unzip
+        def arr(xs: Seq[Any]) = xs.mkString("[", ",", "]")
+        System.err.println(f"[bench] solo $name: min ${runs.min}%.2f s " +
+          arr(runs.map(r => f"$r%.2f")) + " jobs " + arr(jobCounts))
+        println(s"""SOLOJSON:{"solo_sec":${runs.min},"runs":${arr(runs)},""" +
+          s""""jobs":${arr(jobCounts)}}""")
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] solo $name failed:")
+        e.printStackTrace()
+        // no SOLOJSON line — the parent records the query as failed
       }
-      if (warmDir.nonEmpty && new java.io.File(warmDir).isDirectory)
-        for (_ <- 1 to 3) run(warmDir)
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        run(sfDir)
-        (System.nanoTime() - t0) / 1e9
-      }
-      System.err.println(f"[bench] solo $name: min ${runs.min}%.2f s " +
-        runs.map(r => f"$r%.2f").mkString("[", ",", "]"))
-      println("SOLOJSON:" +
-        s"""{"solo_sec":${runs.min},"runs":${runs.mkString("[", ",", "]")}}""")
-    } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] solo $name failed:")
-      e.printStackTrace()
-      // no SOLOJSON line — the parent records the query as failed
     } finally spark.stop()
   }
 }

@@ -141,7 +141,10 @@ object StatusEndpoint {
     private[graft] def size: Int = runs.size
   }
 
-  private def jsonEscape(s: String): String =
+  /** JSON string escape: backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * a consumer's json.load of Verify's oracle_sql.json fail. */
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

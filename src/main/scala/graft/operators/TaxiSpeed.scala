@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.TaxiCsv
 
 /** The reference's flagship query: average NYC-taxi trip speed (mph) by
   * day of week (Sample.cs:137-240, README.md:105-110), in both the
@@ -58,17 +60,13 @@ object TaxiSpeed {
       0 to 6, keyName = "day", outName = "avg_speed_mph")
 
   /** Faithful mode with the group domain from the driver-side file
-    * listing (S2): all-zero files participate, and the facts are
-    * scanned exactly once.
+    * listing (S2): all-zero files participate, the facts are scanned
+    * exactly once, and the path is listed once (a glob's scan reads
+    * that same listing).
     */
-  def faithfulAvgByDowListed(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    import spark.implicits._
-    val files = graft.sources.TaxiCsv.listFiles(spark, path).toDF("_grp")
-    TwoLevelMean.faithful(withSpeed(graft.sources.TaxiCsv.trips(spark, path)),
-      col("file"), col("day"), col("speed_mph"),
-      0 to 6, keyName = "day", outName = "avg_speed_mph",
-      groupsOpt = Some(files))
+  def faithfulAvgByDowListed(spark: SparkSession, path: String): DataFrame = {
+    val files = TaxiCsv.listFiles(spark, path)
+    faithfulOver(spark, files, TaxiCsv.scanPaths(path, files))
   }
 
   /** Faithful mode over an EXPLICIT URI list — the reference's actual
@@ -77,17 +75,23 @@ object TaxiSpeed {
     * transports (http(s) via [[graft.sources.HttpReadFileSystem]],
     * where globs cannot expand). The group domain is the given list:
     * an all-rejected file still contributes its zero row, exactly as
-    * in the glob form.
+    * in the glob form. Each URI is status-checked once.
     */
-  def faithfulAvgByDowListed(spark: org.apache.spark.sql.SparkSession,
+  def faithfulAvgByDowListed(spark: SparkSession,
       paths: Seq[String]): DataFrame = {
+    val uris = TaxiCsv.normalizeUris(spark, paths)
+    faithfulOver(spark, uris, uris)
+  }
+
+  /** Faithful mean with `groups` as the file domain, over the
+    * already-resolved `scanPaths`. */
+  private def faithfulOver(spark: SparkSession, groups: Seq[String],
+      scanPaths: Seq[String]): DataFrame = {
     import spark.implicits._
-    val norm = graft.sources.TaxiCsv.normalizeUris(spark, paths)
-    TwoLevelMean.faithful(
-      withSpeed(graft.sources.TaxiCsv.tripsListed(spark, norm)),
+    TwoLevelMean.faithful(withSpeed(TaxiCsv.tripsResolved(spark, scanPaths)),
       col("file"), col("day"), col("speed_mph"),
       0 to 6, keyName = "day", outName = "avg_speed_mph",
-      groupsOpt = Some(norm.toDF("_grp")))
+      groupsOpt = Some(groups.toDF("_grp")))
   }
 
   /** Weighted (corrected) mode: plain global mean per day — every trip

@@ -83,45 +83,34 @@ object TaxiCsv {
     * `file` is the raw input_file_name() URI (an opaque per-file key —
     * kept transform-free in the hot scan).
     */
-  def acceptedLines(spark: SparkSession, path: String): DataFrame = {
-    // Expand a glob to explicit files via the S2 listing (driver-side
-    // metadata op) instead of handing the raw pattern to the reader:
-    // Spark's FileStreamSink.hasMetadata probe getFileStatus()es a
-    // SINGLE path verbatim — a glob string "does not exist" as a file,
-    // and the probe logs that FileNotFoundException with a full stack
-    // (the unattributable stderr trace in the r8 bench artifact). With
-    // an explicit multi-file list the probe is skipped entirely; an
-    // empty expansion falls through to the original path so the
-    // reader's PATH_NOT_FOUND contract is unchanged.
-    val paths =
-      if (path.exists("*?[{".contains(_))) {
-        val expanded = listFiles(spark, path)
-        if (expanded.nonEmpty) expanded else Seq(path)
-      } else Seq(path)
-    val lines = spark.read.text(paths: _*)
-      .select(input_file_name().as("file"), col("value"))
-    lines
-      .withColumn("fields", split(col("value"), ","))
-      .filter(size(col("fields")) === 17 &&
-        element_at(col("fields"), 1).try_cast("int").isNotNull)
-  }
+  def acceptedLines(spark: SparkSession, path: String): DataFrame =
+    scan(spark, scanPaths(path, listFiles(spark, path)))
 
-  /** acceptedLines over an EXPLICIT URI list — the reference's
-    * lister→mapper hand-off (`Sample.cs:70-75` passes the lister's URI
-    * array to the mappers verbatim), and the only enumeration form a
-    * listing-less transport supports (http(s): plain HTTP has no
-    * directory protocol — see [[HttpReadFileSystem]]). URIs are
-    * status-qualified first so the `file` column (input_file_name)
-    * joins against them directly. */
-  def acceptedLinesListed(spark: SparkSession,
-      paths: Seq[String]): DataFrame = {
-    val lines = spark.read.text(normalizeUris(spark, paths): _*)
+  /** The paths the scan reads for `path`. A glob is expanded to its S2
+    * listing (`listed`, evaluated only for a glob) instead of handing
+    * the raw pattern to the reader: Spark's FileStreamSink.hasMetadata
+    * probe getFileStatus()es a SINGLE path verbatim — a glob string
+    * "does not exist" as a file, and the probe logs that
+    * FileNotFoundException with a full stack (the unattributable stderr
+    * trace in the r8 bench artifact). With an explicit multi-file list
+    * the probe is skipped entirely; an empty expansion falls through to
+    * the original path so the reader's PATH_NOT_FOUND contract is
+    * unchanged. A file or directory path is read verbatim.
+    */
+  private[graft] def scanPaths(path: String,
+      listed: => Seq[String]): Seq[String] =
+    if (!path.exists("*?[{".contains(_))) Seq(path)
+    else Some(listed).filter(_.nonEmpty).getOrElse(Seq(path))
+
+  /** The one accepted-line scan, over paths already resolved — an
+    * expanded glob, a verbatim path, or status-qualified URIs; the
+    * reader's own resolution is the only status check left. */
+  private def scan(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.text(paths: _*)
       .select(input_file_name().as("file"), col("value"))
-    lines
       .withColumn("fields", split(col("value"), ","))
       .filter(size(col("fields")) === 17 &&
         element_at(col("fields"), 1).try_cast("int").isNotNull)
-  }
 
   /** Qualify each URI through its FileSystem's status (existence check
     * + the scheme://authority/path normal form `listFiles` emits). */
@@ -169,9 +158,21 @@ object TaxiCsv {
   def trips(spark: SparkSession, path: String): DataFrame =
     tripsProjection(acceptedLines(spark, path))
 
-  /** trips over an explicit URI list (see acceptedLinesListed). */
+  /** trips over an EXPLICIT URI list — the reference's lister→mapper
+    * hand-off (`Sample.cs:70-75` passes the lister's URI array to the
+    * mappers verbatim), and the only enumeration form a listing-less
+    * transport supports (http(s): plain HTTP has no directory protocol
+    * — see [[HttpReadFileSystem]]). URIs are status-qualified first so
+    * the `file` column (input_file_name) joins against them directly.
+    */
   def tripsListed(spark: SparkSession, paths: Seq[String]): DataFrame =
-    tripsProjection(acceptedLinesListed(spark, paths))
+    tripsResolved(spark, normalizeUris(spark, paths))
+
+  /** trips over paths already resolved by [[scanPaths]] or
+    * [[normalizeUris]]: no second listing or status check. */
+  private[graft] def tripsResolved(spark: SparkSession,
+      paths: Seq[String]): DataFrame =
+    tripsProjection(scan(spark, paths))
 
   private def tripsProjection(accepted: DataFrame): DataFrame =
     accepted.select(

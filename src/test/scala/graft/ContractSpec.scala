@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -78,14 +80,23 @@ class ContractSpec extends AnyFunSuite {
       case _ => false
     }
     val sfDir = "/root/testdata/sf0.001"
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val offending = fn(spark, sfDir).schema.fields
-        .filterNot(f => safe(f.dataType))
+    val bad = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val (schema, _) = Harness.runQuery(spark, name, sfDir, _.schema)
+      val offending = schema.fields.filterNot(f => safe(f.dataType))
         .map(f => s"${f.name}: ${f.dataType.simpleString}")
-      spark.catalog.clearCache()
       if (offending.isEmpty) None else Some(s"$name -> ${offending.mkString(", ")}")
     }
     assert(bad.isEmpty, s"gate-unsafe output columns:\n${bad.mkString("\n")}")
+  }
+
+  test("the harness is the only session builder under src/") {
+    // perfbench/ sits outside src/ and keeps its own session
+    val needle = "SparkSession" + ".builder"
+    val builders = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains(needle))
+      .map(_.toString).toSeq
+    assert(builders === Seq("src/main/scala/graft/Harness.scala"))
   }
 
   test("O3: progress listener records query completions") {

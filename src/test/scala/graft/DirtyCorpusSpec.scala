@@ -97,54 +97,42 @@ class DirtyCorpusSpec extends AnyFunSuite {
     "t31_classifier_filter", "d30_persisted_lsh_dedup",
     "d31_snapshot_diff", "t32_mixture_drift")
 
-  test("document-family queries run on a null/empty/degenerate corpus") {
-    docQueries.foreach { name =>
-      // collect(), NOT count(): a count-only action lets Catalyst prune
-      // unreferenced projections, hiding e.g. an ANSI divide-by-zero in
-      // a metric column that only throws once every column materializes.
-      val rows = try SparkEntry.queries(name)(spark, dir).collect()
-        catch { case scala.util.control.NonFatal(e) =>
-          fail(s"query $name threw on the dirty corpus: ${e.getMessage}")
-        }
-      assert(rows != null)
-      spark.catalog.clearCache()
+  /** Run each query through collect(), NOT count(): a count-only
+    * action lets Catalyst prune unreferenced projections, hiding e.g.
+    * an ANSI divide-by-zero in a metric column that only throws once
+    * every column materializes. */
+  private def collectAll(what: String, names: Seq[String]): Unit =
+    names.foreach { name =>
+      try Harness.runQuery(spark, name, dir, _.collect())
+      catch { case scala.util.control.NonFatal(e) =>
+        fail(s"query $name threw on the dirty $what: ${e.getMessage}")
+      }
     }
+
+  test("document-family queries run on a null/empty/degenerate corpus") {
+    collectAll("corpus", docQueries)
   }
 
   test("embedding-family queries survive zero and null vectors") {
-    Seq("s1_cosine_topk", "s2_ann_topk", "s3_ivf_topk", "s4_knn_join",
+    collectAll("embeddings", Seq(
+        "s1_cosine_topk", "s2_ann_topk", "s3_ivf_topk", "s4_knn_join",
         "s5_centroids", "s6_kmeans_assign", "s7_kmeans_iter",
         "s8_quantize_int8", "s9_dequantized_topk", "s10_pq_topk",
         "s11_radius_search", "s12_kcenter_coreset", "s13_ivfpq_topk",
         "s14_ivf_persisted_topk", "s15_mmr_rerank", "s16_ivf_knn_join",
         "s17_jl_project",
-        "d6_embedding_dedup", "d13_embedding_clusters", "d17_semantic_dedup")
-      .foreach { name =>
-        val rows = try SparkEntry.queries(name)(spark, dir).collect()
-          catch { case scala.util.control.NonFatal(e) =>
-            fail(s"query $name threw on the dirty embeddings: ${e.getMessage}")
-          }
-        assert(rows != null)
-        spark.catalog.clearCache()
-      }
+        "d6_embedding_dedup", "d13_embedding_clusters", "d17_semantic_dedup"))
   }
 
   test("event-family queries survive null ts/user/type/value rows") {
-    Seq("w1_tumbling_window", "w2_sliding_window", "w3_session_window",
+    collectAll("events", Seq(
+        "w1_tumbling_window", "w2_sliding_window", "w3_session_window",
         "w4_first_event", "w5_funnel_join", "w6_window_topk",
         "w7_click_attribution", "w8_window_uniques", "q60_gap_fill",
         "w10_multi_touch",
         "q61_ewma", "q62_anomaly", "q63_retention", "q64_funnel",
         "q65_conversion_lag", "q66_stickiness", "w9_inactive_users",
-        "events_speed_faithful", "events_speed_weighted")
-      .foreach { name =>
-        val rows = try SparkEntry.queries(name)(spark, dir).collect()
-          catch { case scala.util.control.NonFatal(e) =>
-            fail(s"query $name threw on the dirty events: ${e.getMessage}")
-          }
-        assert(rows != null)
-        spark.catalog.clearCache()
-      }
+        "events_speed_faithful", "events_speed_weighted"))
   }
 
   test("exact dedup accounts for every row including null/empty texts") {

@@ -3,11 +3,14 @@ package graft
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TaxiSpeed
-import graft.sources.HttpIngest
+import graft.sources.{HttpIngest, TaxiCsv}
 
 /** The http(s) ingest transport (`Sample.cs:143`), driven end-to-end
   * against a loopback JDK HttpServer — no network egress. Covers both
@@ -18,11 +21,16 @@ import graft.sources.HttpIngest
 class HttpIngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** Serve `bytes` at `path`; honor Range iff `ranges`. HEAD works. */
+  /** HEAD requests served, per request path. */
+  private val heads = scala.collection.concurrent.TrieMap[String, Int]()
+
+  /** Serve `bytes` at `path`; honor Range iff `ranges`. HEAD works and
+    * is counted in [[heads]]. */
   private def handler(bytes: Array[Byte], ranges: Boolean)
       : com.sun.net.httpserver.HttpHandler = (ex: HttpExchange) => {
     val range = Option(ex.getRequestHeaders.getFirst("Range"))
     if (ex.getRequestMethod == "HEAD") {
+      heads.updateWith(ex.getRequestURI.getPath)(n => Some(n.getOrElse(0) + 1))
       ex.getResponseHeaders.set("Content-Length", bytes.length.toString)
       ex.sendResponseHeaders(200, -1)
     } else range match {
@@ -50,13 +58,13 @@ class HttpIngestSpec extends AnyFunSuite {
     finally server.stop(0)
   }
 
-  // a two-file taxi micro-corpus: deterministic rows, one header line
-  // that the F1 accept filter must drop
-  private def csvOf(rows: Int, day0: Int): String = {
+  // a deterministic taxi micro-corpus with one header line that the
+  // F1 accept filter must drop
+  private def csvOf(rows: Int): String = {
     val sb = new StringBuilder(
       "VendorID,tpep_pickup_datetime,tpep_dropoff_datetime,rest\n")
     (0 until rows).foreach { i =>
-      val d = (day0 + i % 7) % 28 + 1
+      val d = i % 7 + 1
       sb.append(f"1,2017-01-$d%02d 00:10:00,2017-01-$d%02d 00:40:00,1," +
         f"${2.0 + i % 5}%.1f,1,N,1,1,1,10,0,0,0,0,0,10\n")
     }
@@ -65,30 +73,51 @@ class HttpIngestSpec extends AnyFunSuite {
 
   test("taxi pipeline over http:// equals the same bytes from file://") {
     HttpIngest.enable(spark)
-    val (c1, c2) = (csvOf(40, 0), csvOf(25, 3))
-    withServer(
-      ("/d/f1.csv", c1.getBytes("UTF-8"), true),
-      ("/d/f2.csv", c2.getBytes("UTF-8"), true)) { port =>
-      val urls = Seq(s"http://127.0.0.1:$port/d/f1.csv",
-        s"http://127.0.0.1:$port/d/f2.csv")
-      val viaHttp = TaxiSpeed.faithfulAvgByDowListed(spark, urls).collect()
+    // the fixture corpus read four ways: glob, flat directory, explicit
+    // file:// list, and the same bytes as an http:// list
+    val dir = TaxiFixtures.writeDir().toAbsolutePath
+    val names = Seq("01", "02", "03").map(m => s"yellow_tripdata_2017-$m.csv")
+    withServer(names.map(n =>
+        (s"/d/$n", Files.readAllBytes(dir.resolve(n)), true)): _*) { port =>
+      val urls = names.map(n => s"http://127.0.0.1:$port/d/$n")
+      val fileUris = names.map(n => s"file://$dir/$n")
+      heads.clear()
+      val viaHttp = TaxiSpeed.faithfulAvgByDowListed(spark, urls)
+      // one status check by the entry point, two by the reader's own
+      // path resolution (its existence probe and its file index)
+      assert(heads.toMap === names.map(n => s"/d/$n" -> 3).toMap)
 
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("target", "test-tmp"), "httpingest")
-        .toAbsolutePath
-      java.nio.file.Files.writeString(tmp.resolve("f1.csv"), c1)
-      java.nio.file.Files.writeString(tmp.resolve("f2.csv"), c2)
-      val viaFile = TaxiSpeed.faithfulAvgByDowListed(spark,
-        Seq(s"file://$tmp/f1.csv", s"file://$tmp/f2.csv")).collect()
-
-      assert(viaHttp.map(_.toSeq).toSeq === viaFile.map(_.toSeq).toSeq)
-      assert(viaHttp.nonEmpty)
+      val glob = s"$dir/*.csv"
+      val forms = Seq( // (form, trips, faithful, its file keys)
+        ("glob", TaxiCsv.trips(spark, glob),
+          TaxiSpeed.faithfulAvgByDowListed(spark, glob), fileUris),
+        ("directory", TaxiCsv.trips(spark, dir.toString),
+          TaxiSpeed.faithfulAvgByDowListed(spark, dir.toString), fileUris),
+        ("file:// list", TaxiCsv.tripsListed(spark, fileUris),
+          TaxiSpeed.faithfulAvgByDowListed(spark, fileUris), fileUris),
+        ("http:// list", TaxiCsv.tripsListed(spark, urls), viaHttp, urls))
+      def byDay(df: DataFrame) = df.orderBy("day").collect().map(_.toSeq).toSeq
+      // trip rows keyed by file NAME: the http keys are the URLs
+      def results(trips: DataFrame, faithful: DataFrame) = (
+        trips.collect().map(r => (r.getString(0).split('/').last +:
+          r.toSeq.tail).mkString("|")).sorted.toSeq,
+        byDay(faithful), byDay(TaxiSpeed.weightedAvgByDow(trips)))
+      val want = results(forms.head._2, forms.head._3)
+      assert(want._1.size === TaxiFixtures.nAcceptedRows)
+      want._2.foreach { case Seq(d: Int, v: Double) =>
+        assert(math.abs(v - TaxiFixtures.faithfulListedExpected(d)) < 1e-12)
+      }
+      forms.foreach { case (form, trips, faithful, files) =>
+        assert(trips.select("file").distinct().collect().map(_.getString(0))
+          .sorted.toSeq === files, form)
+        assert(results(trips, faithful) === want, form)
+      }
     }
   }
 
   test("split reads agree on range-honoring AND naive servers") {
     HttpIngest.enable(spark)
-    val big = csvOf(2000, 0) // ~150 KB, many splits at 16 KB
+    val big = csvOf(2000) // ~150 KB, many splits at 16 KB
     Seq(true, false).foreach { ranges =>
       withServer(("/big.csv", big.getBytes("UTF-8"), ranges)) { port =>
         val url = s"http://127.0.0.1:$port/big.csv"
